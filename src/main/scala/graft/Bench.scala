@@ -80,8 +80,8 @@ object Bench {
       // compression codec knobs for shuffle/persist and parquet output
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-      // only meaningful with SPARK_GRAFT_CKPT_SER=1 A/B runs (serialized
-      // checkpoint blocks — measured slower, see graft.util.Ckpt)
+      // applies to serialized RDD blocks only; the checkpoint blocks are
+      // deserialized (see graft.util.Ckpt)
       .config("spark.rdd.compress",
         sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "false"))
       .config("spark.sql.parquet.compression.codec",

@@ -1,10 +1,14 @@
 package graft
 
+import scala.util.Random
+import org.apache.spark.sql.Observation
 import graft.analysis.GraphAnalytics
 
 /** Hand-computed oracles for the post-construction graph analytics
   * (degrees, co-discussion projection, 2-hop reach, triangles, fixed-point
-  * PageRank) on small graphs where every value is checkable by hand.
+  * PageRank) on small graphs where every value is checkable by hand, plus
+  * equivalence properties against plain-Scala references on seeded random
+  * graphs.
   */
 class GraphAnalyticsSpec extends SparkSpec {
   import spark.implicits._
@@ -162,5 +166,87 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(got("hub") > got("u2") && got("u1") > got("u2"))
     assert(got.values.sum <= GraphAnalytics.PageRankScale)
     assert(got.values.forall(_ > 0L))
+  }
+
+  private type T = (String, String, String)
+  private val Discusses = Set("DISCUSSES_ZAAK", "DISCUSSES_DOSSIER")
+  private val Cap = 5
+
+  /** Generic nodes n0..n11 with out-edges, self-loops and parallel
+    * predicates (n12..n15 only ever receive: dangling); persons discussing
+    * zaken, some through both predicates and several shared; and zaak:HOT,
+    * discussed by Cap + 1 persons, one of whom also shares zaak:Z0.
+    */
+  private def randomGraph(rnd: Random): Seq[T] = {
+    val generic = (1 to 25).map { _ =>
+      val u = s"n${rnd.nextInt(12)}"
+      val v = if (rnd.nextInt(6) == 0) u else s"n${rnd.nextInt(16)}"
+      (u, if (rnd.nextBoolean()) "P" else "Q", v)
+    }
+    val disc = (1 to 24).map { _ =>
+      (s"persoon:P${rnd.nextInt(12)}", if (rnd.nextBoolean()) "DISCUSSES_ZAAK"
+        else "DISCUSSES_DOSSIER", s"zaak:Z${rnd.nextInt(6)}")
+    }
+    val hot = (0 to Cap).map(i => (s"persoon:H$i", "DISCUSSES_ZAAK", "zaak:HOT"))
+    generic ++ disc ++ hot :+ (("persoon:H0", "DISCUSSES_ZAAK", "zaak:Z0"))
+  }
+
+  /** PageRank by the contract's arithmetic, truncating where `div` does. */
+  private def refPageRank(t: Seq[T], iters: Int, preserve: Boolean): Map[String, Long] = {
+    val s = GraphAnalytics.PageRankScale
+    val edges = t.map(x => (x._1, x._3)).distinct
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val n = nodes.size.toLong
+    val outDeg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val base = (s * 15 / 100) / n
+    var r = nodes.map(_ -> s / n).toMap
+    for (_ <- 1 to iters) {
+      val dang =
+        if (!preserve) 0L
+        else (nodes.filterNot(outDeg.contains).map(r).sum * 85) / (100 * n)
+      val contrib = edges.groupMapReduce(_._2) { case (u, _) =>
+        (r(u) * 85) / (100 * outDeg(u)) }(_ + _)
+      r = nodes.map(v => v -> (base + contrib.getOrElse(v, 0L) + dang)).toMap
+    }
+    r
+  }
+
+  /** Oriented co-discussion pairs over the zaken at or below the cap, and
+    * the dropped (keys, person rows) of the zaken above it. */
+  private def refCoDiscussion(t: Seq[T]): (Set[(String, String)], Long, Long) = {
+    val sets = t.collect { case (p, pred, z) if Discusses(pred) => z -> p }
+      .groupMap(_._1)(_._2).values.map(_.distinct).toSeq
+    val (hot, kept) = sets.partition(_.size > Cap)
+    val pairs = kept.flatMap(ps => for (a <- ps; b <- ps if a < b) yield (a, b)).toSet
+    (pairs, hot.size.toLong, hot.map(_.size.toLong).sum)
+  }
+
+  test("pageRank equals the plain-Scala fixed-point reference on random graphs (both variants)") {
+    val rnd = new Random(7)
+    for (trial <- 1 to 3) {
+      val t = randomGraph(rnd)
+      val df = triples(t: _*)
+      for (iters <- Seq(0, 1, 3, 10); preserve <- Seq(false, true)) {
+        val got = GraphAnalytics.pageRank(df, iters, preserve)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got == refPageRank(t, iters, preserve),
+          s"trial $trial, iters $iters, preserveDanglingMass $preserve")
+      }
+    }
+  }
+
+  test("coDiscussion equals a plain-Scala pair enumeration, cap counters included (random graphs)") {
+    val rnd = new Random(11)
+    for (trial <- 1 to 5) {
+      val t = randomGraph(rnd)
+      val obs = new Observation(s"codisc_ref_$trial")
+      val got = GraphAnalytics.coDiscussion(triples(t: _*), Cap, Some(obs))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      val (pairs, keys, rows) = refCoDiscussion(t)
+      assert(got.length == got.toSet.size, s"trial $trial: duplicate pairs")
+      assert(got.toSet == pairs, s"trial $trial")
+      assert(obs.get("dropped_zaak_keys") == keys, s"trial $trial")
+      assert(obs.get("dropped_zaak_rows") == rows, s"trial $trial")
+    }
   }
 }

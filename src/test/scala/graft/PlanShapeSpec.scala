@@ -2,6 +2,9 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+import org.apache.spark.sql.functions.{col, lit}
+import graft.analysis.GraphAnalytics
 import graft.extract.Extract
 import graft.link.Link
 import graft.synth.Dict
@@ -13,7 +16,10 @@ import graft.synth.Dict
   *    scan (column pruning reaches `ReadSchema`);
   *  - person linking is broadcast-only on the fact side: both the exact
   *    block join and the contains fallback broadcast the dimension, and no
-  *    corpus-sized sort-merge join or fact-side exchange appears.
+  *    corpus-sized sort-merge join or fact-side exchange appears;
+  *  - the graph analyses keep their job-saving shapes: coDiscussion has no
+  *    join, and one pageRank round is one join plus one aggregate (counted
+  *    in the optimized logical plan, which AQE does not rewrite).
   *
   * Complements MaterializeCheckpointSpec's PartitionFilters assertion on
   * the upsert read path.
@@ -60,6 +66,29 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("partial_sum") || p.contains("partial"), s"no partial agg:\n$p")
     val exchanges = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges <= 2, s"degrees plan has $exchanges exchanges (expect <=2):\n$p")
+  }
+
+  private def countNodes(df: DataFrame): (Int, Int) = {
+    val p = df.queryExecution.optimizedPlan
+    (p.collect { case j: Join => j }.size, p.collect { case a: Aggregate => a }.size)
+  }
+
+  test("coDiscussion is join-free: pairs are enumerated inside the per-zaak set") {
+    val t = Seq(("p1", "DISCUSSES_ZAAK", "z1"), ("p2", "DISCUSSES_DOSSIER", "z1"),
+      ("p3", "DISCUSSES_ZAAK", "z1")).toDF("subj", "pred", "obj")
+    val df = GraphAnalytics.coDiscussion(t)
+    assert(countNodes(df)._1 == 0, s"join in coDiscussion plan:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("one pageRank round over checkpointed inputs is one Join and one Aggregate") {
+    val edges = graft.util.Ckpt(Seq(("a", "b", 1L), ("b", "a", 2L), ("b", "c", 2L))
+      .toDF("subj", "obj", "out_deg"))
+    val nodes = Seq("a", "b", "c").toDF("node")
+    val zeros = graft.util.Ckpt(nodes.select(col("node"), lit(0L).as("share")))
+    val ranks = graft.util.Ckpt(nodes.select(col("node"), lit(7L).as("rank_fp")))
+    val round = GraphAnalytics.rankRound(edges, zeros, ranks, 5L)
+    assert(countNodes(round) == ((1, 1)),
+      s"round plan:\n${round.queryExecution.optimizedPlan}")
   }
 
   test("the WHOLE canonical-triple plan contains no shuffle join (broadcast dims only)") {
