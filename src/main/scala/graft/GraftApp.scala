@@ -77,22 +77,9 @@ object GraftApp {
 
     val stages = Pipeline.build(spark, turns,
       linkStagingDir = opts.get("staging").filter(_.nonEmpty))
-    // initial (cluster-sized) load: the FUSED one-exchange write over the
-    // compact derivation — dedup rides the write-aligned shuffle, key
-    // strings never shuffle, node table derives from compact blocks, and
-    // the edge count comes back from write metadata (no separate count
-    // pass). Incremental loads keep the string canonical + upsert path.
-    val nTriples =
-      if (!Materialize.graphExists(spark, warehouse))
-        Materialize.writeGraphFused(spark, warehouse, stages.canonicalCompact)
-      else {
-        // lazy localCheckpoint: one materialization at count(), flat plans
-        // for every materialize action (no Catalyst re-run per action)
-        val canonical = stages.canonical.localCheckpoint(false)
-        val n = canonical.count()
-        Materialize.writeGraph(spark, warehouse, canonical, triplesDistinct = true)
-        n
-      }
+    // one write entry: the fused one-exchange write into an empty
+    // warehouse, keyed upserts of the same coded rows into an existing one
+    val nTriples = Materialize.writeGraph(spark, warehouse, stages.canonicalCompact)
     Checkpoint.recordProcessed(spark, lineage, runId, "pipeline", turns, "conv_id",
       configHash = cfgHash)
 

@@ -286,13 +286,14 @@ object SparkEntry {
         .orderBy("label", "key")
     }),
 
-    // Materialize round trip: canonical triples → bucketed upsert warehouse →
-    // read back the edge table (exercises the idempotent writer + endpoint
-    // semi-join inside the correctness gate; oracle is the pure derivation)
+    // Materialize round trip: coded canonical triples → the graph writer
+    // (fused into this empty warehouse) → read back the edge table
+    // (exercises the write-aligned dedup and the key/label decode inside
+    // the correctness gate; oracle is the pure derivation)
     "kg_edges_materialized" -> ((s, dir) => {
       val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-      val canonical = graft.pipeline.Pipeline.build(s, turns(s, dir)).canonical
-      graft.materialize.Materialize.writeGraph(s, wh, canonical)
+      val compact = graft.pipeline.Pipeline.build(s, turns(s, dir)).canonicalCompact
+      graft.materialize.Materialize.writeGraph(s, wh, compact)
       graft.materialize.Materialize.readEdges(s, wh)
         .select("src_label", "src_key", "rel_type", "dst_label", "dst_key")
         .orderBy("src_key", "rel_type", "dst_key")

@@ -123,8 +123,9 @@ object Canonicalize {
     }
   }
 
-  /** Canonical triple set WITHOUT materializing the corpus-sized
-    * mention→canon map — the scale path `Pipeline.build` uses.
+  /** The canonical triple set in COMPACT ID SPACE, WITHOUT materializing
+    * the corpus-sized mention→canon map — the scale path `Pipeline.build`
+    * uses on `Triples.allNonMentionCompact` rows.
     *
     * Key fact (provable from the linker's construction): every
     * MATCHES_PERSOON triple collapses to a self-loop under rewrite. A
@@ -133,48 +134,16 @@ object Canonicalize {
     * because this linker row exists), so subj-canon == obj-canon, and
     * `rewrite` drops the row. The canonical set is therefore exactly the
     * NON-mention triples with `persoon:` endpoints rewritten through the
-    * tiny `persoonCanonMap` — two broadcast joins instead of two
-    * corpus-sized sort-merge joins, and when CC produced no cross-entity
-    * merges (the map is the identity — checked on the driver over the
-    * dimension-sized map, ~10^4 rows) the rewrite and the re-dedup are
-    * skipped entirely: the branches of `Triples.all` are each internally
-    * distinct and their predicates are pairwise disjoint, so their union is
-    * already a set.
-    */
-  def canonicalTriples(nonMentionTriples: DataFrame, persoonCanon: DataFrame): DataFrame =
-    canonicalTriples(nonMentionTriples, persoonCanon,
-      !persoonCanon.where(col("node") =!= col("canon")).isEmpty)
-
-  /** As above with the has-merges flag precomputed (Pipeline gets it for
-    * free from the driver-side CC — no probe job).
-    */
-  def canonicalTriples(nonMentionTriples: DataFrame, persoonCanon: DataFrame,
-      hasMerges: Boolean): DataFrame = {
-    if (!hasMerges) nonMentionTriples
-    else {
-      val subjMap = broadcast(persoonCanon
-        .select(col("node").as("subj"), col("canon").as("subj_canon")))
-      val objMap = broadcast(persoonCanon
-        .select(col("node").as("obj"), col("canon").as("obj_canon")))
-      nonMentionTriples
-        .join(subjMap, Seq("subj"), "left")
-        .join(objMap, Seq("obj"), "left")
-        .select(
-          coalesce(col("subj_canon"), col("subj")).as("subj"),
-          col("pred"),
-          coalesce(col("obj_canon"), col("obj")).as("obj"))
-        .distinct()
-    }
-  }
-
-  /** Persoon-endpoint rewrite in COMPACT ID SPACE (the fused-write path,
-    * `Triples.allNonMentionCompact` rows): rows whose subject / object
-    * prefix is `persoon:` get their raw id mapped through the
-    * dimension-sized canon map — two BROADCAST left joins, fully map-side,
-    * BEFORE the write-aligned exchange, so dedup downstream runs once over
-    * post-rewrite rows (merge-collapsed duplicates included) and the bucket
-    * hash is computed on the canonical key. `hasMerges=false` (the
-    * identity map) skips everything, like `canonicalTriples`.
+    * tiny `persoonCanonMap`.
+    *
+    * Rows whose subject / object prefix is `persoon:` get their raw id
+    * mapped through that dimension-sized map — two BROADCAST left joins,
+    * fully map-side, BEFORE the write-aligned exchange, so dedup downstream
+    * runs once over post-rewrite rows (merge-collapsed duplicates included)
+    * and the bucket hash is computed on the canonical key. When CC produced
+    * no cross-entity merges (`hasMerges=false`: the map is the identity,
+    * known on the driver from the dimension-sized CC) the rewrite is
+    * skipped entirely.
     */
   def rewriteCompact(compact: DataFrame, persoonCanon: DataFrame,
       hasMerges: Boolean): DataFrame = {

@@ -40,34 +40,16 @@ object Materialize {
     */
   val NBuckets = 16
 
-  /** Node table from a triple set: every endpoint becomes (label, key) with
-    * label = the key's namespace prefix.
+  /** Node table of a string triple set (the `kg_nodes` view): every
+    * endpoint becomes (label, key) with label = the key's namespace prefix.
     */
   def nodes(triples: DataFrame): DataFrame =
-    nodesRaw(triples).distinct()
+    nodeRows(triples.select(col("subj").as("key"))
+      .unionByName(triples.select(col("obj").as("key"))))
+      .distinct()
 
-  /** Non-deduplicated node rows — `writeGraph` feeds these straight to the
-    * upsert, whose key-dedup subsumes the distinct (one exchange instead of
-    * two over the widest data).
-    */
-  def nodesRaw(triples: DataFrame): DataFrame = {
-    val subj = triples.select(col("subj").as("key"))
-    val obj = triples.select(col("obj").as("key"))
-    subj.unionByName(obj)
-      .select(substring_index(col("key"), ":", 1).as("label"), col("key"))
-  }
-
-  /** Edge table from a triple set (src_label, src_key, rel_type, dst_label,
-    * dst_key). No dedup here: the upsert dedups on the natural edge key, so
-    * an extra distinct would just add a full shuffle of the widest data.
-    */
-  def edges(triples: DataFrame): DataFrame =
-    triples.select(
-      substring_index(col("subj"), ":", 1).as("src_label"),
-      col("subj").as("src_key"),
-      col("pred").as("rel_type"),
-      substring_index(col("obj"), ":", 1).as("dst_label"),
-      col("obj").as("dst_key"))
+  private def nodeRows(keys: DataFrame): DataFrame =
+    keys.select(substring_index(col("key"), ":", 1).as("label"), col("key"))
 
   /** Referential-integrity filter: keep only edges whose BOTH endpoints exist
     * in the nodes table (double LEFT SEMI — S7/J9).
@@ -85,8 +67,7 @@ object Materialize {
   }
 
   /** True when the warehouse already holds a node table — the
-    * initial-vs-incremental decision `writeGraph` makes, exposed so callers
-    * can route the initial load through `writeGraphFused`.
+    * initial-vs-incremental decision `writeGraph` makes.
     */
   def graphExists(spark: SparkSession, warehouse: String): Boolean =
     exists(spark, s"$warehouse/nodes")
@@ -245,79 +226,6 @@ object Materialize {
     spark.read.parquet(path)
       .where(col("bucket").isin(buckets.map(b => b: Any): _*))
 
-  /** INITIAL full-derivation write, shaped for the first (cluster-sized)
-    * load — the path the bench measures:
-    *
-    *  - The triple plan is executed exactly ONCE, straight into the edge
-    *    table. No intermediate checkpoint of the triple set (at 10^12 rows
-    *    those blocks are pure extra memory/IO traffic) and, when the caller
-    *    guarantees `triplesDistinct` (Canonicalize.canonicalTriples emits a
-    *    set by construction), no dedup exchange over the widest data either.
-    *  - The node table is derived from the WRITTEN edge files — a columnar
-    *    re-read of the two key columns, far cheaper than re-deriving from
-    *    the triple plan. Endpoint integrity is a no-op by construction on a
-    *    full derivation (the node set IS the endpoint set).
-    *  - Returns the edge count from parquet metadata — no extra data pass
-    *    (replaces a count action over the triple set).
-    *
-    * Overwrite semantics make a retried initial load idempotent after a
-    * partial failure.
-    */
-  def writeGraphInitial(spark: SparkSession, warehouse: String,
-      triples: DataFrame, triplesDistinct: Boolean = true,
-      nBuckets: Int = NBuckets, filesPerBucket: Int = 1): Long = {
-    val edgePath = s"$warehouse/edges"
-    val e = edges(triples)
-      .withColumn("bucket", pmod(xxhash64(col("src_key")), lit(nBuckets)).cast("int"))
-    val eUnique =
-      if (triplesDistinct) e
-      else e.dropDuplicates(Seq("src_key", "rel_type", "dst_key"))
-    val subKey = xxhash64(col("src_key"), col("rel_type"), col("dst_key"))
-    alignedForWrite(eUnique, subKey, nBuckets, filesPerBucket)
-      .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(edgePath)
-    writeBucketMeta(spark, edgePath, nBuckets)
-    val written = spark.read.parquet(edgePath)
-    val keys = written.select(col("src_key").as("key"))
-      .unionByName(written.select(col("dst_key").as("key")))
-    upsert(spark, s"$warehouse/nodes",
-      keys.select(substring_index(col("key"), ":", 1).as("label"), col("key")),
-      Seq("key"), "key", nBuckets, filesPerBucket)
-    written.count()
-  }
-
-  /** FUSED initial graph write over the compact triple derivation
-    * (`Triples.allNonMentionCompact` rows, persoon endpoints already
-    * rewritten via `Canonicalize.rewriteCompact`) — the ONE-EXCHANGE form
-    * of `writeGraphInitial`, producing a byte-equivalent warehouse:
-    *
-    *  - The dedup rides the write-aligned exchange. Every copy of a
-    *    (pred, a, b) triple hashes to the same (bucket, sub-split)
-    *    partition — bucket is a function of (subj_pre, a) and the
-    *    sub-split of the triple — so a partition-local sort + lag-window
-    *    drops duplicates exactly like the separate `.distinct()` exchange
-    *    of the string path, without a second corpus-sized shuffle. The
-    *    sort is per-partition CPU (scales with cores); the removed
-    *    exchange was memory-bus bytes (does not).
-    *  - Key STRINGS are built after the dedup, inside the write stage —
-    *    they are never shuffled at all (the exchange carries compact ids).
-    *  - The deduped compact rows are lazily `localCheckpoint`ed, so the
-    *    node derivation re-reads ~id-sized blocks instead of re-decoding
-    *    the written string parquet (the string path's node pass was the
-    *    single most expensive write job). Node keys partial-aggregate in
-    *    the blocks scan; only distinct keys reach the node exchange.
-    *
-    * Overwrite semantics for both tables: a retried initial load is
-    * idempotent after any partial failure.
-    */
-  /** The fused write's dedup-in-the-aligned-exchange plan, exposed for plan
-    * assertions: repartition on (bucket, sub-split) — both functions of the
-    * dedup key — then `distinct()`, which is EXCHANGE-FREE here: the hash
-    * aggregate's ClusteredDistribution(all columns) is satisfied by the
-    * existing HashPartitioning(bucket, _sub) — a subset of the grouping —
-    * and every copy of a (pred, a, b) triple shares (bucket, _sub), so the
-    * partition-local codegen'd hash agg IS a complete dedup (no sort, no
-    * window buffering, no second corpus shuffle).
-    */
   /** Exchange payload compression: the (pred, subj_pre, obj_pre) string
     * triple of a compact row is drawn from the CLOSED 12-entry vocabulary
     * (`Triples.compactVocab` — the prefixes are functions of the
@@ -341,11 +249,19 @@ object Materialize {
       case ((v, i), acc) => when(col("_pc") === i, lit(field(v))).otherwise(acc)
     }.as(out)
 
-  /** Coded form of the aligned dedup — (_pc, a, b, bucket), still hash-
-    * partitioned on (bucket, _sub). Kept coded so `writeGraphFused` can
-    * checkpoint the SMALL representation (the decode is a few codegen'd
-    * comparisons per row, re-running it per consumer is free; re-reading
-    * string blocks is memory traffic).
+  /** The dedup of both write paths, riding the write-aligned exchange:
+    * repartition on (bucket, sub-split) — both functions of the dedup key —
+    * then `distinct()`, which is EXCHANGE-FREE here: the hash aggregate's
+    * ClusteredDistribution(all columns) is satisfied by the existing
+    * HashPartitioning(bucket, _sub) — a subset of the grouping — and every
+    * copy of a (pred, a, b) triple shares (bucket, _sub), so the
+    * partition-local codegen'd hash agg IS a complete dedup (no sort, no
+    * window buffering, no second corpus shuffle).
+    *
+    * The result stays CODED — (_pc, a, b, bucket), still hash-partitioned
+    * on (bucket, _sub) — so the writers checkpoint the SMALL representation
+    * (the decode is a few codegen'd comparisons per row, re-running it per
+    * consumer is free; re-reading string blocks is memory traffic).
     */
   private[graft] def alignedDedupCoded(compact: DataFrame, nBuckets: Int,
       filesPerBucket: Int): DataFrame = {
@@ -363,29 +279,10 @@ object Materialize {
       .select("_pc", "a", "b", "bucket")
   }
 
-  private def decoded(coded: DataFrame): DataFrame =
-    coded.select(decodeCode(_._1, "pred"), col("a"), col("b"),
-      decodeCode(_._2, "subj_pre"), decodeCode(_._3, "obj_pre"), col("bucket"))
-
-  /** Prefix codes grouped by their DISTINCT prefix value (largest group
-    * last so it becomes the `otherwise` branch): the 12-entry vocabulary
-    * collapses to 3 subject / 5 object prefixes, so the per-row decode is
-    * 2-4 int comparisons instead of 12.
-    */
-  private def groupedPre(field: ((String, String, String)) => String)
-      : Seq[(String, Seq[Int])] =
-    graft.triples.Triples.compactVocab.zipWithIndex
-      .groupBy { case (v, _) => field(v) }
-      .toSeq.map { case (p, xs) => (p, xs.map(_._2)) }
-      .sortBy(_._2.size)
-
   private def byPre(field: ((String, String, String)) => String)(
-      mk: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val gs = groupedPre(field)
-    gs.init.foldRight(mk(gs.last._1)) { case ((p, codes), acc) =>
-      when(col("_pc").isin(codes.map(Integer.valueOf): _*), mk(p)).otherwise(acc)
-    }
-  }
+      mk: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.triples.Triples.byPrefix(field,
+      codes => col("_pc").isin(codes.map(Integer.valueOf): _*))(mk)
 
   /** Endpoint KEY straight from the coded row: `concat(prefix, id)` with the
     * prefix a literal per code group — empty-prefix rows (votes) carry the
@@ -406,28 +303,60 @@ object Materialize {
     byPre(field)(p =>
       if (p.isEmpty) substring_index(id, ":", 1) else lit(p.stripSuffix(":")))
 
-  private[graft] def alignedDedup(compact: DataFrame, nBuckets: Int,
-      filesPerBucket: Int): DataFrame =
-    decoded(alignedDedupCoded(compact, nBuckets, filesPerBucket))
+  /** Edge-table columns of a coded row: labels/keys decode straight from
+    * the prefix code — grouped literal branches, no decode→concat→
+    * substring_index round trip per endpoint.
+    */
+  private def edgeCols: Seq[org.apache.spark.sql.Column] = Seq(
+    labelFromCode(_._2, col("a")).as("src_label"),
+    keyFromCode(_._2, col("a")).as("src_key"),
+    decodeCode(_._1, "rel_type"),
+    labelFromCode(_._3, col("b")).as("dst_label"),
+    keyFromCode(_._3, col("b")).as("dst_key"))
 
+  /** Both endpoint keys of every coded row from ONE scan (explode of a
+    * 2-element array) — the union-of-two-projections form read every
+    * checkpoint block TWICE; block re-reads are exactly the memory traffic
+    * that does not scale with cores on one socket (measured: the node map
+    * side was the worst-inflating job at 4 cores, ~2x). A key can be
+    * reached via different (prefix, id) splits — vote rows carry full keys
+    * with empty prefixes — so node dedup runs on the built key.
+    */
+  private def endpointKeys(coded: DataFrame): DataFrame =
+    coded.select(explode(array(
+      keyFromCode(_._2, col("a")),
+      keyFromCode(_._3, col("b")))).as("key"))
+
+  /** INITIAL graph write into an empty warehouse, over coded rows
+    * (`Pipeline.Stages.canonicalCompact`) — the ONE-EXCHANGE form:
+    *
+    *  - The dedup rides the write-aligned exchange (`alignedDedupCoded`):
+    *    the sort-free partition-local hash agg replaces a separate
+    *    `.distinct()` exchange, so there is no second corpus-sized shuffle.
+    *  - Key STRINGS are built after the dedup, inside the write stage —
+    *    they are never shuffled at all (the exchange carries compact ids).
+    *  - The deduped coded rows are lazily `localCheckpoint`ed, so the node
+    *    derivation re-reads ~id-sized blocks instead of re-decoding the
+    *    written string parquet. Node keys partial-aggregate in the blocks
+    *    scan; only distinct keys reach the node exchange. Endpoint
+    *    integrity is a no-op by construction (the node set IS the
+    *    endpoint set).
+    *  - Returns the edge count, observed on the write itself.
+    *
+    * Overwrite semantics for both tables: a retried initial load is
+    * idempotent after any partial failure. `nBuckets`/`filesPerBucket`
+    * size the layout; the app's callers reach this through `writeGraph`.
+    */
   def writeGraphFused(spark: SparkSession, warehouse: String, compact: DataFrame,
       nBuckets: Int = NBuckets, filesPerBucket: Int = 1): Long = {
     val edgePath = s"$warehouse/edges"
     // checkpoint the CODED rows: both consumers (edge write, node
     // derivation) re-read ~id-sized blocks and decode in their own codegen
     val codedCk = graft.util.Ckpt(alignedDedupCoded(compact, nBuckets, filesPerBucket))
-    // labels/keys decode straight from the prefix code — grouped literal
-    // branches, no decode→concat→substring_index round trip per endpoint
-    val e = codedCk.select(
-      labelFromCode(_._2, col("a")).as("src_label"),
-      keyFromCode(_._2, col("a")).as("src_key"),
-      decodeCode(_._1, "rel_type"),
-      labelFromCode(_._3, col("b")).as("dst_label"),
-      keyFromCode(_._3, col("b")).as("dst_key"),
-      col("bucket"))
-    // the edge count rides the write itself as an observed metric — the
-    // string path's final `read.parquet(edges).count()` job re-parsed every
-    // file footer (~60 ms each) for a number the write plan already knows
+    val e = codedCk.select(edgeCols :+ col("bucket"): _*)
+    // the edge count rides the write itself as an observed metric — a
+    // final `read.parquet(edges).count()` job would re-parse every file
+    // footer (~60 ms each) for a number the write plan already knows
     val obs = org.apache.spark.sql.Observation()
     // the checkpointed RDD preserves the aligned physical partitioning
     // (CollectMetrics passes partitioning through), so this dynamic-
@@ -443,22 +372,9 @@ object Materialize {
       .option("parquet.enable.dictionary#dst_key", "false")
       .parquet(edgePath)
     writeBucketMeta(spark, edgePath, nBuckets)
-    // nodes: distinct endpoint KEYS from the compact blocks (a key can be
-    // reached via different (prefix, id) splits — vote rows carry full
-    // keys with empty prefixes — so the distinct runs on the built key).
-    // ONE scan emitting both endpoints per row (explode of a 2-element
-    // array) — the union-of-two-projections form read every checkpoint
-    // block TWICE; block re-reads are exactly the memory traffic that does
-    // not scale with cores on one socket (measured: the node map side was
-    // the worst-inflating job at 4 cores, ~2x)
-    val keys = codedCk.select(explode(array(
-        keyFromCode(_._2, col("a")),
-        keyFromCode(_._3, col("b")))).as("key"))
-      .distinct()
-    val nodeRows = keys
-      .select(substring_index(col("key"), ":", 1).as("label"), col("key"))
+    val nodeTable = nodeRows(endpointKeys(codedCk).distinct())
       .withColumn("bucket", pmod(xxhash64(col("key")), lit(nBuckets)).cast("int"))
-    alignedForWrite(nodeRows, xxhash64(col("key")), nBuckets, filesPerBucket)
+    alignedForWrite(nodeTable, xxhash64(col("key")), nBuckets, filesPerBucket)
       .write.partitionBy("bucket").mode(SaveMode.Overwrite)
       .option("parquet.enable.dictionary#key", "false")
       .parquet(s"$warehouse/nodes")
@@ -466,25 +382,24 @@ object Materialize {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Materialize a triple set into `warehouse/{nodes,edges}` with endpoint
-    * integrity enforced against the post-upsert node set. Set
-    * `triplesDistinct` when the input is already a set (the canonical
-    * pipeline output is) to skip the initial-path dedup exchange.
+  /** THE graph write: coded rows (`Pipeline.Stages.canonicalCompact`) into
+    * `warehouse/{nodes,edges}`; returns the number of distinct triples in
+    * the batch. An empty warehouse gets `writeGraphFused`. An existing one
+    * gets idempotent upserts of node and edge rows built from the same
+    * checkpointed `alignedDedupCoded` rows and the same code projections,
+    * with edge endpoint integrity enforced against the post-upsert node
+    * set. Re-running a batch leaves both tables unchanged.
     */
-  def writeGraph(spark: SparkSession, warehouse: String, triples: DataFrame,
-      triplesDistinct: Boolean = false, nBuckets: Int = NBuckets): Unit = {
-    val initial = !exists(spark, s"$warehouse/nodes")
-    if (initial) {
-      writeGraphInitial(spark, warehouse, triples, triplesDistinct, nBuckets)
-      ()
-    } else {
-      upsert(spark, s"$warehouse/nodes", nodesRaw(triples), Seq("key"), "key", nBuckets)
-      val e = withEndpointIntegrity(edges(triples),
+  def writeGraph(spark: SparkSession, warehouse: String, compact: DataFrame): Long =
+    if (!graphExists(spark, warehouse)) writeGraphFused(spark, warehouse, compact)
+    else {
+      val codedCk = graft.util.Ckpt(alignedDedupCoded(compact, NBuckets, 1))
+      upsert(spark, s"$warehouse/nodes", nodeRows(endpointKeys(codedCk)), Seq("key"), "key")
+      val e = withEndpointIntegrity(codedCk.select(edgeCols: _*),
         spark.read.parquet(s"$warehouse/nodes"))
-      upsert(spark, s"$warehouse/edges", e,
-        Seq("src_key", "rel_type", "dst_key"), "src_key", nBuckets)
+      upsert(spark, s"$warehouse/edges", e, Seq("src_key", "rel_type", "dst_key"), "src_key")
+      codedCk.count()
     }
-  }
 
   def readNodes(spark: SparkSession, warehouse: String): DataFrame =
     spark.read.parquet(s"$warehouse/nodes").drop("bucket")

@@ -8,37 +8,46 @@ import graft.link.Link
 import graft.synth.Dict
 import graft.triples.Triples
 
-/** End-to-end pipeline facade: extract → link → triples → canonicalize.
-  * The stage DAG mirrors the reference's loader ordering
+/** End-to-end pipeline facade: extract → link → canonicalize → coded
+  * triples. The stage DAG mirrors the reference's loader ordering
   * (src/loaders/loader_manager.py:118-225): dimensions first (broadcast
   * dims feed the link stage), then the analysis pipeline.
   *
-  * `linkedPersons` feeds three consumers (triples, interruptions via
-  * Triples.all, CC edges) — it is persisted once per run so the
-  * extract+link work is not recomputed per branch.
+  * `linkedPersons` feeds three consumers (triples, interruptions, CC
+  * edges) — it is persisted once per run so the extract+link work is not
+  * recomputed per branch.
   */
 object Pipeline {
 
-  /** `canonicalCompact`: the same canonical triple set as `canonical`, in
-    * the pre-dedup compact form (`Triples.allNonMentionCompact` with
-    * persoon endpoints rewritten) — feed it to
-    * `Materialize.writeGraphFused`, whose write-aligned exchange performs
-    * the dedup. `canonical` remains the deduped string form for every
-    * other consumer.
+  /** `canonicalCompact` is the ONE canonical triple derivation: the coded,
+    * pre-dedup rows of `Triples.allNonMentionCompact` with persoon
+    * endpoints rewritten (`Canonicalize.rewriteCompact`). Feed it to
+    * `Materialize.writeGraph`, whose write-aligned exchange performs the
+    * dedup. `canonical` and `triples` are string views planned only when
+    * asked for (the declared queries, the analyses, the oracle comparison):
+    * `canonical` decodes `canonicalCompact`; `triples` is the
+    * un-canonicalized set with mention provenance.
     */
   final case class Stages(
       turns: DataFrame,
       linkedPersons: DataFrame,
       linkedZaken: DataFrame,
       votes: DataFrame,
-      triples: DataFrame,
-      canonical: DataFrame,
-      canonicalCompact: DataFrame)
+      canonicalCompact: DataFrame) {
+
+    def canonical: DataFrame = Triples.decode(canonicalCompact)
+
+    def triples: DataFrame = {
+      val spark = linkedPersons.sparkSession
+      Triples.all(linkedPersons, linkedZaken, votes,
+        Dict.personsDf(spark), Dict.fractiesDf(spark))
+    }
+  }
 
   /** `observeLink` lets callers attach `observe()` metrics to the link
     * output BEFORE it is checkpointed/consumed, so the counters ride the
-    * pipeline's own first action with zero extra passes (GraftApp uses
-    * this; default = no instrumentation).
+    * pipeline's own first action with zero extra passes (the benchmark's
+    * tracer uses this; default = no instrumentation).
     *
     * `linkStagingDir`: the linked-mentions intermediate feeds three
     * consumers. By default it is held as a lazy `localCheckpoint` —
@@ -100,8 +109,6 @@ object Pipeline {
     val linkedZaken = Link.linkZaken(Extract.casesFrom(wide),
       Dict.zakenDf(spark), Dict.dossiersDf(spark), Dict.documentsDf(spark))
     val votes = Extract.votesFrom(wide)
-    val triples = Triples.all(linkedPersons, linkedZaken, votes,
-      Dict.personsDf(spark), Dict.fractiesDf(spark))
     // Scale-path canonicalization: CC over the surface-form graph (bounded
     // by the alias space, not the corpus), then rewrite only `persoon:`
     // endpoints through the dimension-sized canon map (broadcast). The
@@ -110,15 +117,10 @@ object Pipeline {
     // asserted in ConnectedComponentsSpec. This removes every corpus-sized
     // shuffle from the canonicalize stage.
     val (persoonCanon, hasMerges) = Canonicalize.persoonCanonWithFlag(linkedPersons)
-    val canonical = Canonicalize.canonicalTriples(
-      Triples.allNonMention(linkedPersons, linkedZaken, votes,
-        Dict.personsDf(spark), Dict.fractiesDf(spark)),
-      persoonCanon, hasMerges)
     val canonicalCompact = Canonicalize.rewriteCompact(
       Triples.allNonMentionCompact(linkedPersons, linkedZaken, votes,
         Dict.personsDf(spark), Dict.fractiesDf(spark)),
       persoonCanon, hasMerges)
-    Stages(turns, linkedPersons, linkedZaken, votes, triples, canonical,
-      canonicalCompact)
+    Stages(turns, linkedPersons, linkedZaken, votes, canonicalCompact)
   }
 }

@@ -1,6 +1,6 @@
 package graft.triples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.analysis.Interruptions
 import graft.functions.TextFunctions
@@ -18,11 +18,12 @@ import graft.model.{InterruptionType, Pred}
   * content-stable md5 (the reference's process-salted Python `hash` is a
   * documented non-determinism we deliberately fix — SURVEY.md §7.4 / F13).
   *
-  * Scale: every branch below is a narrow projection or a per-key
-  * partial-aggregated distinct over already-linked rows; the only joins are
-  * same-key equi-joins on `(conv_id, turn_idx)` (co-partitioned) and a
-  * broadcast dim join for vote→fractie (J12). `unionByName` of the branches
-  * introduces no shuffle of its own.
+  * Triples are derived once, in the coded form of `allNonMentionCompact`
+  * (raw ids plus a pred→prefix table); the string triple set is a `decode`
+  * view of it. Scale: every branch is a narrow projection over
+  * already-linked rows; the only join is a broadcast dim join for
+  * vote→fractie (J12). `unionByName` of the branches introduces no shuffle
+  * of its own.
   */
 object Triples {
 
@@ -30,21 +31,14 @@ object Triples {
   private val C = "conv:"
   private val F = "fractie:"
 
-  private def zaakKey = concat(lit("zaak:"), col("entity_id"))
   private def persoonKey = concat(lit(P), col("persoon_id"))
   private def convKey = concat(lit(C), col("conv_id"))
 
-  private def tri(subj: org.apache.spark.sql.Column, pred: String,
-      obj: org.apache.spark.sql.Column)(df: DataFrame): DataFrame =
-    df.select(subj.as("subj"), lit(pred).as("pred"), obj.as("obj")).distinct()
-
-  /** Projection without dedup — for branches whose input is already unique
-    * per output key (one linker row per mention / one dict row per entity):
-    * skipping the redundant `distinct` removes a full shuffle of the widest
-    * data per branch.
+  /** Projection to (subj, pred, obj) without dedup — for branches whose
+    * input is already unique per output key (one linker row per mention /
+    * one vote per turn): no `distinct`, no shuffle.
     */
-  private def triRaw(subj: org.apache.spark.sql.Column, pred: String,
-      obj: org.apache.spark.sql.Column)(df: DataFrame): DataFrame =
+  private def triRaw(subj: Column, pred: String, obj: Column)(df: DataFrame): DataFrame =
     df.select(subj.as("subj"), lit(pred).as("pred"), obj.as("obj"))
 
   /** Mention provenance: VlosSpeaker-node MATCHES_PERSOON edge
@@ -57,52 +51,6 @@ object Triples {
       concat(lit("mention:"), TextFunctions.stableId(
         col("conv_id"), col("turn_idx"), col("v_first"), col("v_last"))),
       Pred.MatchesPersoon, persoonKey)(linkedPersons)
-
-  /** (persoon, SPOKE_IN, conv) — reference loader :258-318. */
-  def spokeIn(linkedPersons: DataFrame): DataFrame =
-    tri(persoonKey, Pred.SpokeIn, convKey)(linkedPersons)
-
-  /** Same-turn speaker × case co-occurrence → DISCUSSES_ZAAK (tier-1 zaak
-    * match) or DISCUSSES_DOSSIER (dossier/document fallback tiers) —
-    * reference connection semantics vlos_pipeline.py:324-353 with tier split
-    * per :280-308. Equi-join on (conv_id, turn_idx): both sides derive from
-    * the same scan, so at scale this is a co-partitioned join.
-    */
-  def discusses(linkedPersons: DataFrame, linkedZaken: DataFrame): DataFrame = {
-    val z = linkedZaken.where(col("entity_id").isNotNull)
-      .select("conv_id", "turn_idx", "entity_id", "match_type")
-    val joined = linkedPersons.select("conv_id", "turn_idx", "persoon_id")
-      .join(z, Seq("conv_id", "turn_idx"))
-    joined.select(
-      persoonKey.as("subj"),
-      when(col("match_type") === graft.model.MatchType.Exact, Pred.DiscussesZaak)
-        .otherwise(Pred.DiscussesDossier).as("pred"),
-      zaakKey.as("obj")).distinct()
-  }
-
-  /** Conversation provenance edges (reference CONTAINS_* edges, loader :420-470). */
-  def containment(linkedPersons: DataFrame, linkedZaken: DataFrame): DataFrame =
-    tri(convKey, Pred.ContainsSpeaker, persoonKey)(linkedPersons)
-      .unionByName(tri(convKey, Pred.ContainsZaak, zaakKey)(
-        linkedZaken.where(col("entity_id").isNotNull)))
-
-  /** Dictionary membership edges (reference Persoon→Fractie via
-    * FractieZetelPersoon; dims are part of the graph, seed_enums parity).
-    */
-  def memberOf(persons: DataFrame): DataFrame =
-    triRaw(persoonKey, Pred.MemberOf, concat(lit(F), col("fractie_id")))(persons)
-
-  /** Interruption triples from the W1 sequence analysis —
-    * reference loader :471-520.
-    */
-  def interruptions(linkedSpeakers: DataFrame): DataFrame = {
-    val events = Interruptions.detect(linkedSpeakers)
-    val interrupter = tri(concat(lit(P), col("interrupter")), Pred.InterruptedIn, convKey)(events)
-    val interrupted = tri(concat(lit(P), col("interrupted")), Pred.WasInterruptedIn, convKey)(events)
-    val responded = tri(concat(lit(P), col("interrupted")), Pred.RespondedIn, convKey)(
-      events.where(col("itype") === InterruptionType.WithResponse))
-    interrupter.unionByName(interrupted).unionByName(responded)
-  }
 
   /** Vote triples: synthetic vote node per utterance, fractie resolved by
     * name (J12 — reference vlos_neo4j_loader.py:536-540). `fracties` is a
@@ -121,78 +69,37 @@ object Triples {
         triRaw(col("vote_key"), Pred.CastByFractie, concat(lit(F), col("fractie_id")))(withId))
   }
 
-  /** Every branch except mention provenance — the input to the scale-path
-    * canonicalization (`Canonicalize.canonicalTriples`), which proves the
-    * mention branch always self-loops away. Raw branches fused under ONE
-    * distinct (see the raw-branch Scaladoc), so the result is a set.
-    *
-    * The fused distinct runs in COMPACT ID SPACE: branches that need dedup
-    * emit `(pred, a, b)` with the raw entity ids, and the namespaced key
-    * strings are built AFTER the dedup from a pred→prefix mapping (the
-    * prefix pair is a function of the predicate, so id-space dedup ≡
-    * string-space dedup). The one corpus-sized exchange of the derivation
-    * therefore carries ~1/3 the bytes of pre-built key strings, and the
-    * concats run on the deduped (×5-10 smaller) row set. The vote branches
-    * are unique by construction (the vote key embeds its whole row) and
-    * predicate-disjoint from the rest, so they bypass the exchange
-    * entirely.
-    */
-  /** The raw (pred, a, b) branch union in COMPACT ID SPACE, pre-dedup —
-    * the single source of the branch list, shared by `allNonMention`
-    * (string path) and `allNonMentionCompact` (fused write path).
+  /** The raw (pred, a, b) branch union in COMPACT ID SPACE, pre-dedup:
+    * every non-vote branch emits the raw entity ids, and the namespaced key
+    * strings are only built after the dedup from the pred→prefix table
+    * (`compactVocab`). The linker output must carry the co-row zaak link
+    * (`z_entity_id`/`z_match_type`, threaded through the argmax by
+    * `Pipeline.build`), so the same-turn speaker×zaak co-occurrence is a
+    * column reference — no join.
     */
   private def compactUnion(linkedPersons: DataFrame, linkedZaken: DataFrame,
       persons: DataFrame): DataFrame = {
     val speakers = linkedPersons
       .select(col("conv_id"), col("turn_idx"), col("persoon_id").as("speaker"))
-    def compactTri(pred: org.apache.spark.sql.Column,
-        a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)(
-        df: DataFrame): DataFrame =
+    def compactTri(pred: Column, a: Column, b: Column)(df: DataFrame): DataFrame =
       df.select(pred.as("pred"), a.as("a"), b.as("b"))
-    val z = linkedZaken.where(col("entity_id").isNotNull)
-    // DISCUSSES input: when the linker output carries the co-row zaak link
-    // (Pipeline.build threads z_entity_id/z_match_type through the argmax),
-    // the same-turn speaker×zaak co-occurrence is a column reference — no
-    // join. Plain linker output (direct callers) falls back to the
-    // (conv_id, turn_idx) equi-join; both produce the same pairs because
-    // the carried columns ARE the zaak link of the same turn row.
-    def discussesPred(matchType: org.apache.spark.sql.Column) =
-      when(matchType === graft.model.MatchType.Exact, Pred.DiscussesZaak)
-        .otherwise(Pred.DiscussesDossier)
-    // SPOKE_IN + CONTAINS_SPEAKER (+ DISCUSSES in carry mode) from ONE scan
-    // of the linked blocks: each linker row emits its 2-3 compact triples
-    // via an exploded struct array instead of one scan per branch — at
-    // corpus scale the repeated block scans are pure memory traffic
-    val linkedTris =
-      if (linkedPersons.columns.contains("z_entity_id"))
-        // the third struct's pred is NULL when the row carries no zaak link;
-        // those sentinel rows are filtered right after the explode
-        linkedPersons.select(explode(array(
-          struct(lit(Pred.SpokeIn).as("pred"),
-            col("persoon_id").as("a"), col("conv_id").as("b")),
-          struct(lit(Pred.ContainsSpeaker).as("pred"),
-            col("conv_id").as("a"), col("persoon_id").as("b")),
-          struct(when(col("z_entity_id").isNotNull,
-            discussesPred(col("z_match_type"))).as("pred"),
-            col("persoon_id").as("a"), col("z_entity_id").as("b")))).as("t"))
-          .select(col("t.pred").as("pred"), col("t.a").as("a"), col("t.b").as("b"))
-          .where(col("pred").isNotNull)
-      else {
-        // plain linker output: DISCUSSES falls back to the co-partitioned
-        // (conv_id, turn_idx) equi-join against the zaak links
-        val discusses = linkedPersons.select("conv_id", "turn_idx", "persoon_id")
-          .join(z.select("conv_id", "turn_idx", "entity_id", "match_type"),
-            Seq("conv_id", "turn_idx"))
-          .select(discussesPred(col("match_type")).as("pred"),
-            col("persoon_id").as("a"), col("entity_id").as("b"))
-        linkedPersons.select(explode(array(
-          struct(lit(Pred.SpokeIn).as("pred"),
-            col("persoon_id").as("a"), col("conv_id").as("b")),
-          struct(lit(Pred.ContainsSpeaker).as("pred"),
-            col("conv_id").as("a"), col("persoon_id").as("b")))).as("t"))
-          .select(col("t.pred").as("pred"), col("t.a").as("a"), col("t.b").as("b"))
-          .unionByName(discusses)
-      }
+    // SPOKE_IN + CONTAINS_SPEAKER + DISCUSSES from ONE scan of the linked
+    // blocks: each linker row emits its 2-3 compact triples via an exploded
+    // struct array instead of one scan per branch — at corpus scale the
+    // repeated block scans are pure memory traffic. The third struct's pred
+    // is NULL when the row carries no zaak link; those sentinel rows are
+    // filtered right after the explode.
+    val linkedTris = linkedPersons.select(explode(array(
+        struct(lit(Pred.SpokeIn).as("pred"),
+          col("persoon_id").as("a"), col("conv_id").as("b")),
+        struct(lit(Pred.ContainsSpeaker).as("pred"),
+          col("conv_id").as("a"), col("persoon_id").as("b")),
+        struct(when(col("z_entity_id").isNotNull,
+          when(col("z_match_type") === graft.model.MatchType.Exact, Pred.DiscussesZaak)
+            .otherwise(Pred.DiscussesDossier)).as("pred"),
+          col("persoon_id").as("a"), col("z_entity_id").as("b")))).as("t"))
+      .select(col("t.pred").as("pred"), col("t.a").as("a"), col("t.b").as("b"))
+      .where(col("pred").isNotNull)
     val events = Interruptions.detect(speakers)
     // ONE pass over the interruption events for all three predicates: the
     // three per-branch forms each re-planned the per-conversation
@@ -215,18 +122,18 @@ object Triples {
           col("interrupted").as("a"), col("conv_id").as("b"))))).as("t"))
       .select(col("t.pred").as("pred"), col("t.a").as("a"), col("t.b").as("b"))
     linkedTris
-      .unionByName(compactTri(lit(Pred.ContainsZaak), col("conv_id"), col("entity_id"))(z))
+      .unionByName(compactTri(lit(Pred.ContainsZaak), col("conv_id"), col("entity_id"))(
+        linkedZaken.where(col("entity_id").isNotNull)))
       .unionByName(compactTri(lit(Pred.MemberOf), col("persoon_id"), col("fractie_id"))(persons))
       .unionByName(interruptionTris)
   }
 
   /** The closed (pred, subj_pre, obj_pre) vocabulary of compact triple rows
-    * — the prefix pair is a FUNCTION of the predicate (mention/vote rows
-    * carry full keys with empty prefixes), which is what lets
-    * `Materialize.alignedDedup` dictionary-encode the whole string triple
-    * to one small int for the write-aligned exchange and decode it back
-    * after the dedup. Mirrors `subjPrefixCol`/`objPrefixCol` below; the
-    * agreement is pinned by FusedWriteSpec's warehouse-equality assertions.
+    * — the ONE pred→prefix table. The prefix pair is a FUNCTION of the
+    * predicate (mention/vote rows carry full keys with empty prefixes), so
+    * a (pred, a, b) dedup is exactly the string-space dedup, and
+    * `Materialize.alignedDedupCoded` can dictionary-encode the whole string
+    * triple to one small int for the write-aligned exchange.
     */
   val compactVocab: Seq[(String, String, String)] = Seq(
     (Pred.SpokeIn, P, C),
@@ -242,55 +149,60 @@ object Triples {
     (Pred.CastByFractie, "", ""),
     (Pred.MatchesPersoon, "", ""))
 
-  /** Key-namespace prefix of the subject / object as a function of the
-    * predicate (the prefix pair is determined by the predicate, so id-space
-    * dedup ≡ string-space dedup).
+  /** A column that picks `mk(prefix)` for the row's subject or object
+    * prefix (`field` of its `compactVocab` entry): one branch per DISTINCT
+    * prefix value, the largest group as the `otherwise` — the 12-entry
+    * vocabulary collapses to 3 subject / 5 object prefixes, so a row costs
+    * 2-4 comparisons instead of 12. `member(codes)` tests whether the row's
+    * vocabulary index is one of `codes`.
     */
-  private def subjPrefixCol: org.apache.spark.sql.Column =
-    when(col("pred").isin(Pred.ContainsSpeaker, Pred.ContainsZaak), C).otherwise(P)
+  private[graft] def byPrefix(field: ((String, String, String)) => String,
+      member: Seq[Int] => Column)(mk: String => Column): Column = {
+    val groups = compactVocab.indices.groupBy(i => field(compactVocab(i)))
+      .toSeq.sortBy(_._2.size)
+    groups.init.foldRight(mk(groups.last._1)) { case ((pre, codes), acc) =>
+      when(member(codes), mk(pre)).otherwise(acc)
+    }
+  }
 
-  private def objPrefixCol: org.apache.spark.sql.Column =
-    when(col("pred").isin(
-      Pred.SpokeIn, Pred.InterruptedIn, Pred.WasInterruptedIn, Pred.RespondedIn), C)
-      .when(col("pred").isin(Pred.DiscussesZaak, Pred.DiscussesDossier), "zaak:")
-      .when(col("pred") === Pred.ContainsSpeaker, P)
-      .when(col("pred") === Pred.ContainsZaak, "zaak:")
-      .otherwise(F) // MEMBER_OF
+  private def prefixCol(field: ((String, String, String)) => String): Column =
+    byPrefix(field, codes => col("pred").isin(codes.map(compactVocab(_)._1): _*))(lit(_))
 
-  def allNonMention(linkedPersons: DataFrame, linkedZaken: DataFrame,
-      voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
-    compactUnion(linkedPersons, linkedZaken, persons)
-      .distinct()
-      .select(
-        concat(subjPrefixCol, col("a")).as("subj"), col("pred"),
-        concat(objPrefixCol, col("b")).as("obj"))
-      .unionByName(votes(voteMentions, fracties))
-
-  /** The full triple derivation in the FUSED-WRITE form: one row per raw
+  /** The full non-mention triple derivation in CODED form: one row per raw
     * (pred, a, b) occurrence (NO dedup exchange here) plus the namespace
-    * prefixes as data columns. Vote triples (unique by construction,
-    * predicate-disjoint) carry their full key strings with empty prefixes,
-    * so `concat(pre, id)` is the final key for every row. The consumer
-    * (`Materialize.writeGraphFused`) dedups this inside the write-aligned
-    * exchange — (pred, a, b) determines the prefixes, so a (pred, a, b)
-    * dedup is exactly `allNonMention`'s string-space distinct.
+    * prefixes from `compactVocab` as data columns. Vote triples (unique by
+    * construction, predicate-disjoint) carry their full key strings with
+    * empty prefixes, so `concat(pre, id)` is the final key for every row.
+    * Consumers dedup: `Materialize.writeGraph` inside its write-aligned
+    * exchange, `decode` for the string view. The mention branch is left
+    * out because it always self-loops away under canonicalization (see
+    * `Canonicalize.rewriteCompact`).
     */
   def allNonMentionCompact(linkedPersons: DataFrame, linkedZaken: DataFrame,
       voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
     compactUnion(linkedPersons, linkedZaken, persons)
-      .select(col("pred"), col("a"), col("b"),
-        subjPrefixCol.as("subj_pre"), objPrefixCol.as("obj_pre"))
       .unionByName(votes(voteMentions, fracties)
-        .select(col("pred"), col("subj").as("a"), col("obj").as("b"),
-          lit("").as("subj_pre"), lit("").as("obj_pre")))
+        .select(col("pred"), col("subj").as("a"), col("obj").as("b")))
+      .select(col("pred"), col("a"), col("b"),
+        prefixCol(_._2).as("subj_pre"), prefixCol(_._3).as("obj_pre"))
 
-  /** The full triple set. Inputs are the upstream stage outputs; dims are the
-    * dictionary DataFrames. (The mention branch is unique by construction,
-    * disjoint from the rest by predicate, and `allNonMention` is already a
-    * set — the union needs no further dedup.)
+  /** The string (subj, pred, obj) view of coded rows: distinct, then
+    * `concat(prefix, id)`. The prefixes are functions of the predicate, so
+    * the coded distinct is the string-space distinct.
+    */
+  def decode(compact: DataFrame): DataFrame =
+    compact.distinct().select(
+      concat(col("subj_pre"), col("a")).as("subj"), col("pred"),
+      concat(col("obj_pre"), col("b")).as("obj"))
+
+  /** The full triple set, mention provenance included. Inputs are the
+    * upstream stage outputs; dims are the dictionary DataFrames. (The
+    * mention branch is unique by construction and disjoint from the rest by
+    * predicate, so the union needs no further dedup.)
     */
   def all(linkedPersons: DataFrame, linkedZaken: DataFrame,
       voteMentions: DataFrame, persons: DataFrame, fracties: DataFrame): DataFrame =
     mentionMatches(linkedPersons)
-      .unionByName(allNonMention(linkedPersons, linkedZaken, voteMentions, persons, fracties))
+      .unionByName(decode(
+        allNonMentionCompact(linkedPersons, linkedZaken, voteMentions, persons, fracties)))
 }

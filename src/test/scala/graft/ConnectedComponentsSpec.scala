@@ -92,20 +92,26 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(scalable == occurrence)
   }
 
-  test("scale-path canonicalTriples equals generic rewrite (identity and merge cases)") {
-    import org.apache.spark.sql.functions.col
+  test("scale-path decode(rewriteCompact) equals generic rewrite (identity and merge cases)") {
+    import org.apache.spark.sql.functions.{col, lit, when}
     val personsDim = Seq(("P1", "F1"), ("P2", "F1"), ("P3", "F2"))
       .toDF("persoon_id", "fractie_id")
     val fractiesDim = Seq(("Alpha", "F1"), ("Beta", "F2")).toDF("naam", "fractie_id")
     val zaken = Seq(("c1", 0, "Z1", "EXACT")).toDF("conv_id", "turn_idx", "entity_id", "match_type")
     val votes = Seq(("c1", 3, "Alpha", "voor")).toDF("conv_id", "turn_idx", "fractie_naam", "vote_norm")
-    def canonSets(linked: org.apache.spark.sql.DataFrame) = {
+    def canonSets(plain: org.apache.spark.sql.DataFrame) = {
+      // the linker carries the same-turn zaak link on each row
+      val zaakAt = col("conv_id") === "c1" && col("turn_idx") === 0
+      val linked = plain
+        .withColumn("z_entity_id", when(zaakAt, lit("Z1")))
+        .withColumn("z_match_type", when(zaakAt, lit("EXACT")))
       val full = graft.canonicalize.Canonicalize.rewrite(
         graft.triples.Triples.all(linked, zaken, votes, personsDim, fractiesDim),
         Canonicalize.canonicalMapScalable(linked))
-      val fast = Canonicalize.canonicalTriples(
-        graft.triples.Triples.allNonMention(linked, zaken, votes, personsDim, fractiesDim),
-        Canonicalize.persoonCanonMap(linked))
+      val (persoonCanon, hasMerges) = Canonicalize.persoonCanonWithFlag(linked)
+      val fast = graft.triples.Triples.decode(Canonicalize.rewriteCompact(
+        graft.triples.Triples.allNonMentionCompact(linked, zaken, votes, personsDim, fractiesDim),
+        persoonCanon, hasMerges))
       def s(df: org.apache.spark.sql.DataFrame) =
         df.select(col("subj"), col("pred"), col("obj"))
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

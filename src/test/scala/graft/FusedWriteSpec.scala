@@ -1,79 +1,121 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.canonicalize.Canonicalize
+import graft.checkpoint.Checkpoint
 import graft.materialize.Materialize
 import graft.pipeline.Pipeline
 import graft.synth.{Dict, TranscriptGen}
 import graft.triples.Triples
 
-/** `Materialize.writeGraphFused` (one-exchange compact write) must produce
-  * EXACTLY the warehouse `writeGraphInitial` produces from the string
-  * canonical set — same edge rows, same node rows, same bucket values,
-  * same count — on the real generator corpus (speakers, cases, votes,
-  * interruptions all present), in both the no-merge fast path and the
-  * persoon-merge rewrite path.
+/** The graph writer over coded triples must produce EXACTLY the warehouse
+  * the row-at-a-time `RowOracle` predicts — same edge rows, same node rows,
+  * same bucket values, same count — on the real generator corpus
+  * (speakers, cases, votes, interruptions all present), in both the
+  * no-merge fast path and the persoon-merge rewrite path; and an
+  * incremental load through the upsert path must equal a one-shot load.
   */
 class FusedWriteSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val sfDir = "/root/testdata/sf0.001"
 
   private def readBack(path: String): DataFrame =
     spark.read.parquet(path)
 
   private def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
-    val cols = a.columns.sorted.map(org.apache.spark.sql.functions.col).toSeq
+    val cols = a.columns.sorted.map(col).toSeq
     val l = a.select(cols: _*)
     val r = b.select(cols: _*)
     assert(l.exceptAll(r).isEmpty && r.exceptAll(l).isEmpty,
-      s"$what differs between initial and fused writes")
+      s"$what differs from the expected rows")
   }
 
-  private lazy val stages: Pipeline.Stages = {
-    val turns = TranscriptGen.transcripts(spark, "/root/testdata/sf0.001")
-    Pipeline.build(spark, turns)
+  private lazy val turns: DataFrame = TranscriptGen.transcripts(spark, sfDir)
+
+  private lazy val stages: Pipeline.Stages = Pipeline.build(spark, turns)
+
+  private lazy val oracleTriples: Set[(String, String, String)] =
+    RowOracle.canonicalTriples(turns.select("conv_id", "turn_idx", "text").collect()
+      .map(r => RowOracle.T(r.getString(0), r.getInt(1), r.getString(2))).toSeq)
+
+  /** The expected (edges, nodes) tables of a triple set, bucket column
+    * included, laid out with `nBuckets` hash buckets of the business key.
+    */
+  private def expectedTables(triples: Set[(String, String, String)],
+      nBuckets: Int): (DataFrame, DataFrame) = {
+    def label(c: String) = substring_index(col(c), ":", 1)
+    def bucket(c: String) = pmod(xxhash64(col(c)), lit(nBuckets)).cast("int")
+    val t = triples.toSeq.toDF("src_key", "rel_type", "dst_key")
+    val edges = t.select(label("src_key").as("src_label"), col("src_key"),
+      col("rel_type"), label("dst_key").as("dst_label"), col("dst_key"),
+      bucket("src_key").as("bucket"))
+    val nodes = triples.toSeq.flatMap(x => Seq(x._1, x._3)).distinct.toDF("key")
+      .select(label("key").as("label"), col("key"), bucket("key").as("bucket"))
+    (edges, nodes)
   }
 
-  test("fused write == string write (pipeline corpus, no-merge path)") {
-    val base = java.nio.file.Files.createTempDirectory("fused-eq").toString
-    val nInitial = Materialize.writeGraphInitial(spark, s"$base/a",
-      stages.canonical, triplesDistinct = true, nBuckets = 8, filesPerBucket = 2)
-    val nFused = Materialize.writeGraphFused(spark, s"$base/b",
+  private def assertWarehouse(wh: String, n: Long,
+      expected: Set[(String, String, String)], nBuckets: Int): Unit = {
+    assert(n == expected.size, s"edge count $n, expected ${expected.size}")
+    val (edges, nodes) = expectedTables(expected, nBuckets)
+    assertSameRows(readBack(s"$wh/edges"), edges, "edges")
+    assertSameRows(readBack(s"$wh/nodes"), nodes, "nodes")
+  }
+
+  test("fused write == row oracle (pipeline corpus, no-merge path)") {
+    val wh = java.nio.file.Files.createTempDirectory("fused-eq").toString
+    val n = Materialize.writeGraphFused(spark, wh,
       stages.canonicalCompact, nBuckets = 8, filesPerBucket = 2)
-    assert(nInitial == nFused, s"edge counts differ: $nInitial vs $nFused")
-    assert(nFused > 0)
-    assertSameRows(readBack(s"$base/a/edges"), readBack(s"$base/b/edges"), "edges")
-    assertSameRows(readBack(s"$base/a/nodes"), readBack(s"$base/b/nodes"), "nodes")
+    assert(n > 0)
+    assertWarehouse(wh, n, oracleTriples, 8)
   }
 
-  test("fused write == string write under a persoon merge (rewrite path)") {
-    import spark.implicits._
+  test("fused write == row oracle under a persoon merge (rewrite path)") {
     // force a cross-entity merge: P01 canonicalizes into P00 — exercises
     // the compact rewrite joins AND the dedup of merge-collapsed rows
     val canonMap = Seq(
       ("persoon:P00", "persoon:P00"),
       ("persoon:P01", "persoon:P00")).toDF("node", "canon")
-    val strings = Canonicalize.canonicalTriples(
-      Triples.allNonMention(stages.linkedPersons, stages.linkedZaken,
-        stages.votes, Dict.personsDf(spark), Dict.fractiesDf(spark)),
-      canonMap, hasMerges = true)
     val compact = Canonicalize.rewriteCompact(
       Triples.allNonMentionCompact(stages.linkedPersons, stages.linkedZaken,
         stages.votes, Dict.personsDf(spark), Dict.fractiesDf(spark)),
       canonMap, hasMerges = true)
-    val base = java.nio.file.Files.createTempDirectory("fused-merge").toString
-    val nInitial = Materialize.writeGraphInitial(spark, s"$base/a",
-      strings, triplesDistinct = true, nBuckets = 4)
-    val nFused = Materialize.writeGraphFused(spark, s"$base/b", compact, nBuckets = 4)
-    assert(nInitial == nFused, s"edge counts differ: $nInitial vs $nFused")
+    val wh = java.nio.file.Files.createTempDirectory("fused-merge").toString
+    val n = Materialize.writeGraphFused(spark, wh, compact, nBuckets = 4)
+    def merge(k: String) = if (k == "persoon:P01") "persoon:P00" else k
+    val expected = oracleTriples.map { case (s, p, o) => (merge(s), p, merge(o)) }
     // the merge must actually have collapsed something: P01 gone, P00 present
-    val srcs = readBack(s"$base/b/edges").select("src_key").distinct()
+    val srcs = readBack(s"$wh/edges").select("src_key").distinct()
       .collect().map(_.getString(0)).toSet
     assert(!srcs.contains("persoon:P01") && srcs.contains("persoon:P00"))
-    assertSameRows(readBack(s"$base/a/edges"), readBack(s"$base/b/edges"), "edges")
-    assertSameRows(readBack(s"$base/a/nodes"), readBack(s"$base/b/nodes"), "nodes")
+    assertWarehouse(wh, n, expected, 4)
+  }
+
+  test("incremental load of the second half of the conversations == one-shot load") {
+    val base = java.nio.file.Files.createTempDirectory("incr-eq").toString
+    val oneShot = Materialize.writeGraph(spark, s"$base/full", stages.canonicalCompact)
+    val half = Checkpoint.bucketOf(col("conv_id"), 2) === 0
+    def load(wh: String, part: DataFrame): Long =
+      Materialize.writeGraph(spark, wh, Pipeline.build(spark, part).canonicalCompact)
+    val nFirst = load(s"$base/halves", turns.where(half))
+    val nSecond = load(s"$base/halves", turns.where(!half))
+    assert(nFirst > 0 && nSecond > 0 && nFirst < oneShot)
+    assertSameRows(readBack(s"$base/halves/edges"), readBack(s"$base/full/edges"), "edges")
+    assertSameRows(readBack(s"$base/halves/nodes"), readBack(s"$base/full/nodes"), "nodes")
+    // a second write of the same batch changes nothing: the same rows in
+    // the same bucket partitions
+    def snapshot(t: String) = (
+      readBack(s"$base/halves/$t").collect().map(_.mkString("|")).sorted.toSeq,
+      new java.io.File(s"$base/halves/$t").list().filter(_.startsWith("bucket=")).sorted.toSeq)
+    val before = Seq("edges", "nodes").map(snapshot)
+    assert(load(s"$base/halves", turns.where(!half)) == nSecond)
+    assert(Seq("edges", "nodes").map(snapshot) == before)
   }
 
   test("the fused dedup rides the aligned exchange — no shuffle on the dedup keys") {
-    val plan = Materialize.alignedDedup(stages.canonicalCompact, 8, 2)
+    val plan = Materialize.alignedDedupCoded(stages.canonicalCompact, 8, 2)
       .queryExecution.executedPlan.toString
     // exactly one write-aligned exchange on (bucket, _sub) ...
     val aligned = plan.linesIterator
@@ -93,8 +135,9 @@ class FusedWriteSpec extends SparkSpec {
   test("the aligned exchange ships the coded payload — no pred/prefix strings") {
     // the dedup aggregate keys over the exchange are the CODED columns:
     // (_pc, a, b, bucket, _sub) — the pred/prefix strings exist only in the
-    // post-dedup decode projection, so they never cross the shuffle
-    val plan = Materialize.alignedDedup(stages.canonicalCompact, 8, 2)
+    // writers' decode projections after the dedup, so they never cross the
+    // shuffle
+    val plan = Materialize.alignedDedupCoded(stages.canonicalCompact, 8, 2)
       .queryExecution.executedPlan.toString
     val aggKeys = plan.linesIterator
       .filter(_.contains("HashAggregate(keys=["))

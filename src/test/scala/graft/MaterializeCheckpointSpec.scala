@@ -19,6 +19,17 @@ class MaterializeCheckpointSpec extends SparkSpec {
   private def triples(rows: (String, String, String)*): DataFrame =
     rows.toSeq.toDF("subj", "pred", "obj")
 
+  /** Coded rows (pred, a, b, subj_pre, obj_pre) of namespaced triples, with
+    * the prefixes `Triples.compactVocab` assigns to each predicate.
+    */
+  private def compact(rows: (String, String, String)*): DataFrame = {
+    val vocab = graft.triples.Triples.compactVocab.map(v => v._1 -> v).toMap
+    rows.map { case (s, p, o) =>
+      val (_, sp, op) = vocab(p)
+      (p, s.stripPrefix(sp), o.stripPrefix(op), sp, op)
+    }.toDF("pred", "a", "b", "subj_pre", "obj_pre")
+  }
+
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
 
@@ -26,21 +37,30 @@ class MaterializeCheckpointSpec extends SparkSpec {
     val t = triples(("persoon:P1", "SPOKE_IN", "conv:c1"))
     val n = Materialize.nodes(t).collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(n == Set(("persoon", "persoon:P1"), ("conv", "conv:c1")))
-    val e = Materialize.edges(t).head()
-    assert(e.getAs[String]("src_label") == "persoon" && e.getAs[String]("dst_label") == "conv"
-      && e.getAs[String]("rel_type") == "SPOKE_IN")
+    val wh = tmp("wh-labels")
+    Materialize.writeGraph(spark, wh, compact(
+      ("persoon:P1", "SPOKE_IN", "conv:c1"),
+      ("conv:c1", "HAS_FRACTIE_VOTE", "vote:v1")))
+    val e = Materialize.readEdges(spark, wh).collect()
+      .map(r => r.getAs[String]("rel_type") -> r).toMap
+    assert(e("SPOKE_IN").getAs[String]("src_label") == "persoon" &&
+      e("SPOKE_IN").getAs[String]("dst_label") == "conv")
+    // empty-prefix (vote) rows carry the full key; the label is parsed from it
+    assert(e("HAS_FRACTIE_VOTE").getAs[String]("src_key") == "conv:c1" &&
+      e("HAS_FRACTIE_VOTE").getAs[String]("dst_label") == "vote")
+    assert(Materialize.readNodes(spark, wh).count() == 3)
   }
 
   test("writeGraph is idempotent: double run yields identical tables") {
     val wh = tmp("wh-idem")
-    val t = triples(
+    val t = compact(
       ("persoon:P1", "SPOKE_IN", "conv:c1"),
       ("persoon:P2", "SPOKE_IN", "conv:c1"),
       ("conv:c1", "CONTAINS_SPEAKER", "persoon:P1"))
-    Materialize.writeGraph(spark, wh, t)
+    assert(Materialize.writeGraph(spark, wh, t) == 3)
     val nodes1 = sortedRows(Materialize.readNodes(spark, wh))
     val edges1 = sortedRows(Materialize.readEdges(spark, wh))
-    Materialize.writeGraph(spark, wh, t) // re-run same batch
+    assert(Materialize.writeGraph(spark, wh, t) == 3) // re-run same batch
     assert(sortedRows(Materialize.readNodes(spark, wh)) == nodes1)
     assert(sortedRows(Materialize.readEdges(spark, wh)) == edges1)
     assert(nodes1.length == 3 && edges1.length == 3)
@@ -48,8 +68,8 @@ class MaterializeCheckpointSpec extends SparkSpec {
 
   test("incremental batch only adds its own data; existing rows survive") {
     val wh = tmp("wh-incr")
-    Materialize.writeGraph(spark, wh, triples(("persoon:P1", "SPOKE_IN", "conv:c1")))
-    Materialize.writeGraph(spark, wh, triples(("persoon:P2", "SPOKE_IN", "conv:c2")))
+    Materialize.writeGraph(spark, wh, compact(("persoon:P1", "SPOKE_IN", "conv:c1")))
+    Materialize.writeGraph(spark, wh, compact(("persoon:P2", "SPOKE_IN", "conv:c2")))
     val nodes = Materialize.readNodes(spark, wh)
     assert(nodes.count() == 4)
     assert(Materialize.readEdges(spark, wh).count() == 2)
@@ -159,10 +179,11 @@ class MaterializeCheckpointSpec extends SparkSpec {
 
   test("endpoint integrity drops edges with a missing endpoint (merge_rel parity)") {
     val nodes = Seq(("persoon", "persoon:P1"), ("conv", "conv:c1")).toDF("label", "key")
-    val edges = Materialize.edges(triples(
-      ("persoon:P1", "SPOKE_IN", "conv:c1"), // both endpoints exist
-      ("persoon:P9", "SPOKE_IN", "conv:c1"), // missing src
-      ("persoon:P1", "SPOKE_IN", "conv:c9"))) // missing dst
+    val edges = Seq(
+      ("persoon", "persoon:P1", "SPOKE_IN", "conv", "conv:c1"), // both endpoints exist
+      ("persoon", "persoon:P9", "SPOKE_IN", "conv", "conv:c1"), // missing src
+      ("persoon", "persoon:P1", "SPOKE_IN", "conv", "conv:c9")) // missing dst
+      .toDF("src_label", "src_key", "rel_type", "dst_label", "dst_key")
     val kept = Materialize.withEndpointIntegrity(edges, nodes).collect()
     assert(kept.length == 1 && kept.head.getAs[String]("src_key") == "persoon:P1")
   }

@@ -43,7 +43,7 @@ class StreamingSpec extends SparkSpec {
 
     StreamingPipeline.runIncremental(spark, in, whStream, ckpt)
     Materialize.writeGraph(spark, whBatch,
-      Pipeline.build(spark, all).canonical)
+      Pipeline.build(spark, all).canonicalCompact)
 
     assert(edgeSet(whStream) == edgeSet(whBatch))
     assert(edgeSet(whStream).nonEmpty)
@@ -67,7 +67,7 @@ class StreamingSpec extends SparkSpec {
       val allTurns = spark.read
         .schema(StreamingPipeline.turnSchema)
         .option("recursiveFileLookup", "true").parquet(in)
-      Materialize.writeGraph(spark, whFull, Pipeline.build(spark, allTurns).canonical)
+      Materialize.writeGraph(spark, whFull, Pipeline.build(spark, allTurns).canonicalCompact)
       edgeSet(whFull)
     }
     assert(edgeSet(wh) == full)
